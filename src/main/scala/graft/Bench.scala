@@ -132,7 +132,7 @@ object Bench {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      // Long-run block hygiene. localCheckpoint blocks (every iterative
+      // Long-run block hygiene. Local-checkpoint blocks (every iterative
       // loop's lineage truncation) are freed by ContextCleaner only
       // after a GC drops their RDD references into its queue — and on a
       // 24g heap that never fills, the only guaranteed GC is Spark's

@@ -23,7 +23,7 @@ object Verify {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       // same long-run hygiene as Bench: a 133-query verify run in one
-      // JVM accumulates localCheckpoint blocks (ContextCleaner frees
+      // JVM accumulates local-checkpoint blocks (ContextCleaner frees
       // them only on GC — default periodic GC is 30min away) and SQL
       // status-store plan graphs; bound both so the tail of the run
       // doesn't pay the pile-up

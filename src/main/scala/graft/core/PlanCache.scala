@@ -75,12 +75,14 @@ final class PlanCache(maxEntries: Int = 16) {
   }
 
   /** The cached frame for `key` if (and only if) it is already memoized
-    * — no build, no insertion, but a hit refreshes LRU recency and
-    * re-registers dropped storage like [[getOrBuild]]. Lets a builder
-    * derive one frame from another already-paid one (e.g. a
-    * higher-threshold edge set sliced from a lower-threshold memo)
-    * without forcing the cheaper frame into existence when nothing
-    * has paid for it. */
+    * — no build, no insertion, and a miss runs no job. A hit refreshes
+    * LRU recency, and a hit whose storage was dropped (e.g. by
+    * `clearCache()`) is re-registered and re-materialized EAGERLY with
+    * one `count()` job before it is returned, exactly like
+    * [[getOrBuild]]. Lets a builder derive one frame from another
+    * already-paid one (e.g. a higher-threshold edge set sliced from a
+    * lower-threshold memo) without forcing the cheaper frame into
+    * existence when nothing has paid for it. */
   def peek(spark: SparkSession, key: String): Option[DataFrame] = {
     val hit = m.synchronized(m.get((spark, key)))
     if (hit == null) None

@@ -29,25 +29,29 @@ import org.apache.spark.sql.SparkSession
   *    small-R local pathology, it cannot change behavior at scale.
   *
   *  - shuffle/spill dirs go to the RAM-backed tmpfs when one is
-  *    mounted (`/dev/shm`, 64 GiB+ in this sandbox): shuffle data at
+  *    mounted with at least 4 GiB usable: shuffle data at
   *    the bench's scale factors is a few MB per exchange and
   *    transient, and the guide's own framing ("local disk bandwidth
   *    for shuffle files can be the tighter limit — check both")
   *    makes local-dir placement a measured deployment choice. A
   *    cluster deployment points `spark.local.dir` at NVMe through
   *    cluster conf; `SPARK_GRAFT_LOCAL_DIR` overrides here, and a
-  *    missing/unwritable tmpfs falls back to the JVM default, so
-  *    nothing breaks off-sandbox.
+  *    missing, unwritable or small tmpfs falls back to the JVM
+  *    default, so nothing breaks off-sandbox. A tmpfs spends RAM the
+  *    heap also needs, so a small one would turn a large spill into
+  *    memory pressure rather than disk I/O.
   */
 object ShuffleIo {
   /** Pick the shuffle local dir: explicit env override, else tmpfs
-    * when present and writable, else None (Spark default). */
+    * when present, writable and with ≥ 4 GiB usable, else None (Spark
+    * default). */
   private[graft] def localDir(): Option[String] =
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
       val shm = java.nio.file.Paths.get("/dev/shm")
       try {
         if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm)) {
+          java.nio.file.Files.isWritable(shm) &&
+          java.nio.file.Files.getFileStore(shm).getUsableSpace >= (4L << 30)) {
           val d = shm.resolve("graft-spark-local")
           java.nio.file.Files.createDirectories(d)
           Some(d.toString)

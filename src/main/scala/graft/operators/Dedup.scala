@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixpoint, Tables}
 import graft.functions.PortableHash
 import graft.functions.Shingles._
 import graft.functions.Vectors
@@ -621,11 +621,10 @@ object Dedup {
     * converges in O(component diameter) rounds (typically ≤ 5 for
     * near-dup clusters). Each round is ONE job and ONE shuffle
     * (union + groupBy-min with map-side partial mins); the aggregate
-    * that materializes the lazily-localCheckpointed round result also
-    * yields Σcomp, whose monotone decrease doubles as the convergence
-    * test — no separate convergence scan. Lineage is truncated per
-    * round so the loop survives arbitrarily many iterations at
-    * scale. */
+    * that materializes the lazily cut round result also yields Σcomp,
+    * whose monotone decrease doubles as the convergence test — no
+    * separate convergence scan. A [[Fixpoint.closure]]: labels that
+    * are still moving after `maxRounds` rounds raise. */
   def components(pairs: DataFrame, maxRounds: Int = 20,
       seed: DataFrame = null): DataFrame = {
     // materialize the pair derivation once — the union below references
@@ -657,79 +656,48 @@ object Dedup {
     // after edge REMOVAL a component can split and stale labels would
     // under-segment — recompute cold for compaction/deletion runs.
     val coldLabels = edges.select(col("src").as("node")).distinct()
-    var labels = (if (seed == null) coldLabels.withColumn("comp", col("node"))
-                  else coldLabels
-                    .join(seed.select(col("doc_id").as("node"),
-                      col("component").as("seed_comp")), Seq("node"), "left")
-                    .select(col("node"),
-                      least(col("node"),
-                        coalesce(col("seed_comp"), col("node"))).as("comp")))
-      // lazy: round 1's union + join both scan every seed partition,
-      // so the seed materializes inside round 1's job instead of its
-      // own (there is no pre-loop action at all — see labelSum)
-      .localCheckpoint(eager = false)
-    // labels only ever decrease (min-propagation), so Σcomp strictly
-    // decreases on any change: convergence = the sum holding still.
-    // Decimal sum: a 100 TB graph's Σ(64-bit ids) overflows a long.
-    // No pre-loop sum of the seed: round 1 ALWAYS changes a label on
-    // any nonempty edge set (the edge holding the globally-minimal
-    // endpoint propagates it to a larger id), so the comparison can
-    // start at round 2 and the seed's dedicated aggregate job is
-    // saved — the seed checkpoint materializes inside round 1's job
-    // instead. (A degenerate all-self-loop edge set runs one extra
-    // idempotent round; an EMPTY edge set yields a null round-1 sum,
-    // which reads as converged rather than the NPE the seed-sum
-    // comparison used to hit.)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < maxRounds) {
-      val t0 = System.nanoTime()
+    val seedLabels = if (seed == null) coldLabels.withColumn("comp", col("node"))
+      else coldLabels
+        .join(seed.select(col("doc_id").as("node"),
+          col("component").as("seed_comp")), Seq("node"), "left")
+        .select(col("node"),
+          least(col("node"), coalesce(col("seed_comp"), col("node"))).as("comp"))
+    // labels only ever decrease (min-propagation): convergence = Σcomp
+    // holding still. No pre-loop sum of the seed: round 1 ALWAYS
+    // changes a label on any nonempty edge set (the edge holding the
+    // globally-minimal endpoint propagates it to a larger id), so the
+    // test starts at round 2 and the seed's dedicated aggregate job is
+    // saved — the lazily cut seed materializes inside round 1's job
+    // instead (round 1's union + join both scan every seed partition).
+    // (A degenerate all-self-loop edge set runs one extra idempotent
+    // round; an EMPTY edge set reads as converged.)
+    val settled = Fixpoint.sumSettles("comp")
+    // non-convergence raises: labels that are still moving are a valid
+    // refinement (over-segmented), but dedup built on them would
+    // under-merge
+    val labels = try Fixpoint.closure("components", maxRounds,
+        "labels still moving; raise maxRounds for graphs with " +
+          s"diameter > $maxRounds")(Fixpoint.cut(seedLabels)) { labels =>
       // one round = one shuffle: each node keeps the min of its own
       // label and its neighbors' labels (union + groupBy-min, with
       // map-side partial mins)
-      val next = labels
+      val next = Fixpoint.cut(labels
         .unionAll(edges
           .join(labels.hint("shuffle_hash"), col("src") === col("node"))
           .select(col("dst").as("node"), col("comp")))
         .groupBy(col("node"))
-        .agg(min("comp").as("comp"))
-        .localCheckpoint(eager = false)
-      // this aggregate materializes the lazy checkpoint AND evaluates
-      // convergence — one job per round, no separate scan. Round 1
-      // (prevSum == null) is always "changed" on a nonempty graph;
-      // a null s means the label set itself is empty — converged.
-      val s = labelSum(next)
-      changed = s != null && (prevSum == null || s.compareTo(prevSum) != 0)
-      prevSum = s
-      labels = next
-      rounds += 1
-      // per-round telemetry: when a bench number for this operator
-      // moves between runs, this line localizes it to round count vs
-      // per-round cost vs checkpoint materialization. Locale.ROOT: a
-      // comma decimal separator would break scripts parsing the line.
-      System.err.println("[graft] components round " + rounds + ": " +
-        String.format(java.util.Locale.ROOT, "%.3f",
-          (System.nanoTime() - t0) / 1e9) +
-        s" s, sum=$s, changed=$changed")
+        .agg(min("comp").as("comp")))
+      // the Σ aggregate materializes the lazy cut AND tests
+      // convergence — one job per round, no separate scan
+      (next, settled(next))
+    } finally {
+      // the final labels are a materialized checkpoint — they no
+      // longer reference the pair/edge lineage, so the blocks cached
+      // for the loop can be released here (or after a raise) instead
+      // of leaking until the session's LRU evicts them
+      edges.unpersist(blocking = false)
+      p.unpersist(blocking = false)
     }
-    if (changed) {
-      // surfacing beats silently emitting partial components: labels
-      // are still a valid refinement (over-segmented), but dedup built
-      // on them would under-merge
-      System.err.println(s"[graft] components: min-label propagation did not " +
-        s"converge within $maxRounds rounds (labels still moving); " +
-        s"raise maxRounds for graphs with diameter > $maxRounds")
-    }
-    // the final labels are a materialized localCheckpoint — they no
-    // longer reference the pair/edge lineage, so the blocks cached for
-    // the loop can be released here instead of leaking until the
-    // session's LRU evicts them
-    edges.unpersist(blocking = false)
-    p.unpersist(blocking = false)
     labels.select(col("node").as("doc_id"), col("comp").as("component"))
       .sortWithinPartitions("doc_id")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixpoint, Tables}
 
 /** Iterative graph analytics beyond connected components (which
   * lives with its dedup consumer in [[Dedup.components]]).
@@ -133,10 +133,7 @@ object Graph {
     * the planner would fall back to sort-merge and re-exchange +
     * re-sort the full edge set every round — measured 2.5× slower
     * here, and the difference GROWS with |edges|/|nodes| at 100 TB.
-    * Lineage is truncated with *lazy* localCheckpoints (same
-    * discipline as [[Dedup.components]], but with no per-round
-    * convergence action the rounds pipeline into one job — each
-    * round's result still materializes exactly once).
+    * The rounds are a [[graft.core.Fixpoint.fixed]] unroll (one job).
     * Every node has out-edges (both edge directions exist), so there
     * is no dangling-mass term. */
   def pagerank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame =
@@ -217,10 +214,6 @@ object Graph {
     // either way: prepare affects layout, never values.
     val b = prepareRanks(
       tradeEdges(spark, dir).withColumn("w", lit(1L)), assumeNoSinks = true)
-    if (b.n == 0) {
-      b.release()
-      return b.nodes.withColumn("pr", lit(0L)).select(col("node"), col("pr"))
-    }
     val mid = runRanks(b, coldIters, seed = null)
     val out = top100(runRanks(b, moreIters, seed = mid))
     b.release()
@@ -237,19 +230,12 @@ object Graph {
     * splitting IS the weighted formula with w ≡ 1 ((pr·w) div wout ≡
     * pr div outdeg — GraphProfileSpec pins the equivalence
     * bit-exactly), so there is a single copy of the loop discipline
-    * (edge partition + cache, zero-seed union, dangling term, lazy
-    * checkpoints) to maintain. */
+    * (edge partition + cache, zero-seed union, dangling term) to
+    * maintain. */
   private def pagerankLoop(edgeList: DataFrame, iters: Int,
       assumeNoSinks: Boolean, weightBound: Long = Long.MaxValue,
       seed: DataFrame = null): DataFrame = {
     val b = prepareRanks(edgeList, assumeNoSinks, weightBound)
-    // empty edge set (or all-filtered weighted input): no nodes, no
-    // ranks — return the empty (node, pr) frame instead of letting
-    // the base computation divide by zero
-    if (b.n == 0) {
-      b.release()
-      return b.nodes.withColumn("pr", lit(0L)).select(col("node"), col("pr"))
-    }
     val out = runRanks(b, iters, seed)
     b.release()
     out
@@ -292,22 +278,16 @@ object Graph {
     // is VALUE-identical and cheaper (one emptiness probe here beats
     // a no-op semi-join + broadcast in every round). Callers that
     // prove no-sinks by construction skip the probe too.
-    // lazy + count(): one job materializes the (loop-static) dangling
-    // set AND answers the emptiness question — count is a FULL action,
-    // so the truncated lineage is complete. (Lazy + a partial action
-    // like isEmpty would be the hazard: truncated lineage with
-    // partitions unmaterialized.)
+    // lazy cut + count(): one job materializes the (loop-static)
+    // dangling set AND answers the emptiness question
     val dangling =
       if (assumeNoSinks) null
-      else edges.select(col("dst").as("node")).distinct()
-        .join(srcNodes, Seq("node"), "left_anti")
-        .localCheckpoint(eager = false)
+      else Fixpoint.cut(edges.select(col("dst").as("node")).distinct()
+        .join(srcNodes, Seq("node"), "left_anti"))
     val hasDangling = dangling != null && dangling.count() > 0
-    // lazy: the count() below is a FULL action, so it materializes the
-    // checkpoint (and the edge cache) in the same job an eager
-    // checkpoint would have spent a separate job on.
-    val nodes = (if (hasDangling) srcNodes.unionAll(dangling) else srcNodes)
-      .localCheckpoint(eager = false)
+    // lazy: the count() below materializes it (and the edge cache)
+    val nodes = Fixpoint.cut(
+      if (hasDangling) srcNodes.unionAll(dangling) else srcNodes)
     val n = nodes.count()
     // fail-fast overflow gate for weighted callers: reads the cached
     // edge blocks (materialized by the count above), costs one tiny
@@ -332,33 +312,27 @@ object Graph {
 
   /** `iters` rounds over a prepared [[RankBase]], from the uniform
     * seed (seed = null) or a caller-supplied prior vector. Returns
-    * the FULL (node, pr) vector, eager-checkpointed — valid after
-    * the base is released. Requires b.n > 0. */
+    * the FULL (node, pr) vector, eagerly cut — valid after the base
+    * is released. */
   private def runRanks(b: RankBase, iters: Int,
       seed: DataFrame): DataFrame = {
     import b.{edges, nodes, dangling, hasDangling, n}
+    // empty edge set (or all-filtered weighted input): no nodes, no
+    // ranks — the empty (node, pr) frame instead of letting the base
+    // computation divide by zero
+    if (n == 0) return nodes.withColumn("pr", lit(0L))
     val base = (Scale * 15 / 100) / n
     // round-0 state: the uniform value, or (warm start) the caller's
     // prior vector with uniform fill for nodes the seed doesn't cover
     // — one node-keyed left join, paid once before round 1, after
     // which the loop is byte-identical to the cold path.
-    // lazy like the intermediate rounds: round 1's join reads every
-    // seed partition, so the seed materializes inside round 1's job
-    // instead of a dedicated eager-checkpoint job here
-    var pr = (if (seed == null) nodes.withColumn("pr", lit(Scale / n))
-              else nodes.join(
-                  seed.select(col("node"), col("pr").as("seed_pr")),
-                  Seq("node"), "left")
-                .select(col("node"),
-                  coalesce(col("seed_pr"), lit(Scale / n)).as("pr")))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to iters) {
-      // intermediate rounds checkpoint lazily (they pipeline into the
-      // final round's job); the LAST round is eager so the whole
-      // chain materializes here, while the edge cache is still alive
-      pr = (if (hasDangling) roundDangling(edges, pr, base, nodes, dangling, n)
-            else round(edges, pr, base, nodes))
-        .localCheckpoint(eager = i == iters)
+    val init = if (seed == null) nodes.withColumn("pr", lit(Scale / n))
+      else nodes.join(seed.select(col("node"), col("pr").as("seed_pr")),
+          Seq("node"), "left")
+        .select(col("node"), coalesce(col("seed_pr"), lit(Scale / n)).as("pr"))
+    val pr = Fixpoint.fixed("pagerank", iters)(init) { pr =>
+      if (hasDangling) roundDangling(edges, pr, base, nodes, dangling, n)
+      else round(edges, pr, base, nodes)
     }
     // FULL vector out — presentation slicing (top100) is the public
     // views' concern; the resume path needs every node's rank.
@@ -453,42 +427,30 @@ object Graph {
     // pair aggregate and is NOT the bottleneck; the two extra cache
     // materializations cost more than 2·iters vector-sized exchanges
     // save. Kept as-is; see OPTIMIZATION_r13.md.
-    var h = edges.select(col("c").as("node")).distinct()
+    // each half-round EAGERLY cuts its node-sized sums: the
+    // max-normalization reads them twice (per row, and under the
+    // broadcast max) — the Fixpoint doubling case
+    def half(from: DataFrame, key: String, score: String,
+        to: String, out: String): DataFrame = {
+      val sums = Fixpoint.materialize(edges
+        .join(from.select(col("node").as(key), col(score)).hint("shuffle_hash"),
+          Seq(key))
+        .groupBy(col(to)).agg(sum(col(score)).as("raw")))
+      val m = sums.agg(max(col("raw")).as("m"))
+      sums.crossJoin(broadcast(m))
+        .select(col(to).as("node"),
+          when(col("m") > 0,
+            org.apache.spark.sql.functions.round(lit(1e6) *
+              col("raw").cast("double") / col("m").cast("double"), 0)
+              .cast("long"))
+            .otherwise(lit(0L)).as(out))
+    }
+    val h0 = edges.select(col("c").as("node")).distinct()
       .withColumn("h", lit(HitsScale))
-    var a: DataFrame = null
-    for (_ <- 1 to iters) {
-      // each half-round EAGERLY checkpoints its node-sized vector:
-      // the max-normalization references the pre-division sums twice
-      // (once per row, once under the broadcast max), so an
-      // unmaterialized lineage would double per half-round —
-      // exponential replanning by round 5 (the kmeans discipline:
-      // materialize the small state, keep the big side cached)
-      val ap = edges
-        .join(h.select(col("node").as("c"), col("h")).hint("shuffle_hash"),
-          Seq("c"))
-        .groupBy(col("s")).agg(sum(col("h")).as("ap"))
-        .localCheckpoint(true)
-      val am = ap.agg(max(col("ap")).as("m"))
-      a = ap.crossJoin(broadcast(am))
-        .select(col("s").as("node"),
-          when(col("m") > 0,
-            org.apache.spark.sql.functions.round(lit(1e6) *
-              col("ap").cast("double") / col("m").cast("double"), 0)
-              .cast("long"))
-            .otherwise(lit(0L)).as("a"))
-      val hp = edges
-        .join(a.select(col("node").as("s"), col("a")).hint("shuffle_hash"),
-          Seq("s"))
-        .groupBy(col("c")).agg(sum(col("a")).as("hp"))
-        .localCheckpoint(true)
-      val hm = hp.agg(max(col("hp")).as("m"))
-      h = hp.crossJoin(broadcast(hm))
-        .select(col("c").as("node"),
-          when(col("m") > 0,
-            org.apache.spark.sql.functions.round(lit(1e6) *
-              col("hp").cast("double") / col("m").cast("double"), 0)
-              .cast("long"))
-            .otherwise(lit(0L)).as("h"))
+    val (h, a) = Fixpoint.unroll("hits", iters)((h0, null: DataFrame)) {
+      case (h, _) =>
+        val a = half(h, "c", "h", "s", "a")
+        ((half(a, "s", "a", "c", "h"), a), false)
     }
     val hubs = h.select(lit("hub").as("side"), col("node"),
       col("h").as("score")).orderBy(col("score").desc, col("node")).limit(50)
@@ -1288,11 +1250,12 @@ object Graph {
     * edge set never re-shuffles (a recompute-the-induced-subgraph
     * formulation would semi-join the FULL edge set twice per round).
     * One degree aggregate (map-side partials) + one emptiness check
-    * per round; lazy checkpoints truncate lineage exactly like the
-    * components loop. Synchronous-removal semantics match the
-    * unrolled-CTE DuckDB oracle round for round, and extra rounds
-    * after stability are idempotent — so the driver-side early exit
-    * can never diverge from the oracle's fixed unroll. */
+    * per round, as a [[graft.core.Fixpoint.unroll]] (lazy cuts, the
+    * peel-set count is the round's only action). Synchronous-removal
+    * semantics match the unrolled-CTE DuckDB oracle round for round,
+    * and extra rounds after stability are idempotent — so the
+    * driver-side early exit can never diverge from the oracle's
+    * fixed unroll. */
   def kcore(spark: SparkSession, dir: String, k: Int = 8,
       maxRounds: Int = 4): DataFrame = {
     // the trading edge set = the memoized pagerank pair base's keys —
@@ -1326,36 +1289,22 @@ object Graph {
   def kcoreWeightedOf(undirected: DataFrame, k: Long,
       maxRounds: Int): DataFrame = {
     // symmetric edge list: strength(n) = Σw over rows with src = n
-    var live = undirected
+    val edges = Fixpoint.cut(undirected
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst"), col("w")),
         struct(col("b").as("src"), col("a").as("dst"), col("w")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
-      .repartition(col("src"))
-      // lazy: round 1's strength aggregate scans every partition and
-      // materializes it in the same job (the eager/partial-action
-      // hazard doesn't apply — see pagerankLoop's nodes checkpoint)
-      .localCheckpoint(eager = false)
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds) {
+      .repartition(col("src")))
+    val live = Fixpoint.unroll("kcore", maxRounds)(edges) { live =>
       val deg = live.groupBy(col("src")).agg(sum(col("w")).as("d"))
-      // lazy + count(): ONE job both materializes the peel set (count
-      // is a full action — every partition scans, so the truncated
-      // lineage is complete) and answers the emptiness question the
-      // old eager-checkpoint-then-isEmpty pair spent two jobs on
-      val bad = deg.filter(col("d") < k).select(col("src").as("n"))
-        .localCheckpoint(eager = false)
-      if (bad.count() == 0) stable = true
-      else live = live
+      // lazy cut + count(): ONE job materializes the peel set and
+      // answers the emptiness question (an eager cut + isEmpty is two)
+      val bad = Fixpoint.cut(deg.filter(col("d") < k).select(col("src").as("n")))
+      if (bad.count() == 0) (live, true)
+      else (Fixpoint.cut(live
         .join(bad, col("src") === col("n"), "left_anti")
         .join(bad.withColumnRenamed("n", "m"),
-          col("dst") === col("m"), "left_anti")
-        // lazy: the next round's strength aggregate (or the final
-        // grouped output) is a full action over it
-        .localCheckpoint(eager = false)
-      rounds += 1
-      System.err.println(s"[graft] kcore round $rounds: stable=$stable")
+          col("dst") === col("m"), "left_anti")), false)
     }
     live.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"), sum(col("w")).as("strength"))
@@ -1453,18 +1402,18 @@ object Graph {
     * the collapsed rows with one cumulative-count window:
     * h = max over distinct values v of min(v, #neighbors ≥ v).
     * No per-node arrays, no unbounded collect. Convergence = Σc
-    * holding still (values only decrease; decimal sum — the
-    * [[Dedup.components]] discipline, check from round 2), and
-    * rounds past convergence are idempotent, so the early exit can
-    * never diverge from the oracle's fixed unroll.
+    * holding still ([[graft.core.Fixpoint.sumSettles]]; values only
+    * decrease), and rounds past convergence are idempotent, so the
+    * early exit of the [[graft.core.Fixpoint.unroll]] can never
+    * diverge from the oracle's fixed unroll.
     *
     * `maxRounds` is a safety budget, not a tuning knob: values before
     * convergence are valid UPPER bounds on coreness that later rounds
     * only tighten, so a capped run is a monotone over-estimate (the
-    * round log says which happened; the trading graph converges in
-    * ≤ 6 rounds at every test SF, with budget 8 for headroom). The
-    * oracle matches either way —
-    * both engines walk the identical trajectory.
+    * `coreness round <r>` job descriptions say which happened; the
+    * trading graph converges in ≤ 6 rounds at every test SF, with
+    * budget 8 for headroom). The oracle matches either way — both
+    * engines walk the identical trajectory.
     *
     * No warm-start overload, deliberately: the h-operator converges
     * from any UPPER bound on coreness, and after an edge-additive
@@ -1479,15 +1428,10 @@ object Graph {
     val edges = edgeList.select(col("src"), col("dst"))
       .repartition(col("src")).cache()
     // c₀ = degree: rides the edge partitioning, no extra exchange
-    var c = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
-    def cSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("c").cast("decimal(38,0)"))).head().getDecimal(0)
-    var prev: java.math.BigDecimal = null
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < maxRounds) {
+    val c0 = Fixpoint.cut(edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("c")))
+    val settled = Fixpoint.sumSettles("c")
+    val c = Fixpoint.unroll("coreness", maxRounds)(c0) { c =>
       // neighbor values, collapsed map-side before the shuffle
       val nb = edges
         .join(c.hint("shuffle_hash"), col("src") === col("node"))
@@ -1501,22 +1445,16 @@ object Graph {
       // h-frame IS the next state. Dropping the min drops a whole
       // per-round state join (and the oracle does the same, so the
       // trajectories stay bit-identical).
-      val next = nb
+      val next = Fixpoint.cut(nb
         .withColumn("cum", sum(col("cnt")).over(
           Window.partitionBy(col("dst")).orderBy(col("c").desc)))
         .groupBy(col("dst"))
         .agg(max(least(col("c"), col("cum"))).as("c"))
-        .withColumnRenamed("dst", "node")
-        .localCheckpoint(eager = false)
-      // the convergence aggregate materializes the lazy checkpoint —
-      // one extra tiny job per round, no separate scan. Σ unchanged
-      // under element-wise ≤ means element-wise equal: converged.
-      val s = cSum(next)
-      changed = s != null && (prev == null || s.compareTo(prev) != 0)
-      prev = s
-      c = next
-      rounds += 1
-      System.err.println(s"[graft] coreness round $rounds: changed=$changed")
+        .withColumnRenamed("dst", "node"))
+      // the Σ aggregate materializes the lazy cut — one extra tiny job
+      // per round, no separate scan. Σ unchanged under element-wise ≤
+      // means element-wise equal: converged.
+      (next, settled(next))
     }
     edges.unpersist(blocking = false)
     c.select(col("node"), col("c").as("coreness"))
@@ -1619,23 +1557,18 @@ object Graph {
         s"sssp: max edge weight ${wRow.getLong(1)} × $rounds rounds " +
           s"exceeds the 2^44 cost headroom — rescale the weights")
     }
-    var dist = state
-      .select(col("node"),
-        (col("hops") * HopSpan + col("cost")).as("dist"))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to rounds) {
-      // relax: every edge proposes source-dist + (1 hop, w); the
-      // standing distances ride the same shuffle as zero-delta rows.
-      // No per-round action — rounds pipeline into one job, lineage
-      // truncated by the lazy checkpoints (the pagerank discipline).
-      dist = edges
+    val init = state.select(col("node"),
+      (col("hops") * HopSpan + col("cost")).as("dist"))
+    // relax: every edge proposes source-dist + (1 hop, w); the
+    // standing distances ride the same shuffle as zero-delta rows
+    val dist = Fixpoint.fixed("sssp", rounds)(init) { dist =>
+      edges
         .join(dist.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst").as("node"),
           (col("dist") + lit(HopSpan) + col("w")).as("dist"))
         .unionAll(dist)
         .groupBy(col("node"))
         .agg(min(col("dist")).as("dist"))
-        .localCheckpoint(eager = i == rounds)
     }
     edges.unpersist(blocking = false)
     dist.select(col("node"),
@@ -1808,24 +1741,17 @@ object Graph {
   def ktrussOf(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 3, s"ktruss: k must be >= 3, got $k")
     val minSup = k - 2
-    var live = edges.select(col("u"), col("v"))
-      .repartition(col("u"))
-      .localCheckpoint(eager = false)
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds) {
-      val bad = live
+    val init = Fixpoint.cut(edges.select(col("u"), col("v"))
+      .repartition(col("u")))
+    val live = Fixpoint.unroll("ktruss", maxRounds)(init) { live =>
+      val bad = Fixpoint.cut(live
         .join(trussSupport(live), Seq("u", "v"), "left")
         .filter(coalesce(col("sup"), lit(0L)) < minSup)
-        .select(col("u").as("bu"), col("v").as("bv"))
-        .localCheckpoint(eager = false)
-      if (bad.count() == 0) stable = true
-      else live = live
+        .select(col("u").as("bu"), col("v").as("bv")))
+      if (bad.count() == 0) (live, true)
+      else (Fixpoint.cut(live
         .join(bad, col("u") === col("bu") && col("v") === col("bv"),
-          "left_anti")
-        .localCheckpoint(eager = false)
-      rounds += 1
-      System.err.println(s"[graft] ktruss round $rounds: stable=$stable")
+          "left_anti")), false)
     }
     live.join(trussSupport(live), Seq("u", "v"), "left")
       .select(col("u"), col("v"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixpoint, Tables}
 
 /** Recursive hierarchy flattening — root and depth for every node of
   * a parent-pointer tree (SURVEY.md §2.B extension; reference scope:
@@ -30,10 +30,10 @@ import graft.core.Tables
   *
   * Each round is ONE self-join of a frame bounded by |nodes| (no
   * blow-up: every node contributes exactly one row per round),
-  * lineage truncated with lazy localCheckpoints per the
-  * [[Graph]]/[[Dedup]] fixed-point discipline. `maxRounds` fail-fasts
-  * on cycles and dangling parent pointers (neither ever finishes; a
-  * well-formed tree of depth ≤ 2^maxRounds always does).
+  * lineage truncated with lazy cuts per the [[graft.core.Fixpoint]]
+  * discipline. A [[graft.core.Fixpoint.closure]]: `maxRounds`
+  * fail-fasts on cycles and dangling parent pointers (neither ever
+  * finishes; a well-formed tree of depth ≤ 2^maxRounds always does).
   */
 object Hierarchy {
 
@@ -66,28 +66,24 @@ object Hierarchy {
     // jump state for non-roots: anc = parent, d = 1. Roots carry no
     // row, so "anc is a root" ⇔ "anc has no jump row" for well-formed
     // trees — the composition below exploits exactly that.
-    var jump = nodes.filter(!isRoot)
-      .select(col("node"), col("parent").as("anc"), lit(1L).as("d"))
-      .localCheckpoint(eager = false)
-    var round = 0
-    while (!jump.join(rootIds, col("anc") === col("rid"), "left_anti")
-        .isEmpty) {
-      round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"hierarchy: not closed after $maxRounds doubling rounds — " +
-            s"cycle or dangling parent pointer, or depth > 2^$maxRounds")
+    val jump0 = Fixpoint.cut(nodes.filter(!isRoot)
+      .select(col("node"), col("parent").as("anc"), lit(1L).as("d")))
+    // the termination probe: no jump row still short of a root
+    def closed(jump: DataFrame): Boolean =
+      jump.join(rootIds, col("anc") === col("rid"), "left_anti").isEmpty
+    val jump = Fixpoint.closure("hierarchy", maxRounds,
+        "cycle or dangling parent pointer, or depth > " +
+          s"2^$maxRounds")(jump0, done = closed(jump0)) { j =>
       // compose jumps: a row whose anc is still mid-tree finds anc's
       // own jump row and leaps (anc', d + d'); a row already at a root
       // finds no match (roots have no jump row) and passes through.
-      val j = jump
-      jump = j.as("a")
+      val next = Fixpoint.cut(j.as("a")
         .join(j.select(col("node").as("bn"), col("anc").as("banc"),
           col("d").as("bd")).as("b"), col("a.anc") === col("bn"), "left")
         .select(col("a.node").as("node"),
           coalesce(col("banc"), col("a.anc")).as("anc"),
-          (col("a.d") + coalesce(col("bd"), lit(0L))).as("d"))
-        .localCheckpoint(eager = false)
+          (col("a.d") + coalesce(col("bd"), lit(0L))).as("d")))
+      (next, closed(next))
     }
     jump.select(col("node"), col("anc").as("root"), col("d").as("depth"))
       .unionByName(roots)

@@ -287,7 +287,7 @@ object Linkage {
         PortableHash.h60(col("name_b")).as("d2"))
     val labels = graft.operators.Dedup.components(pairs)
       .select(col("doc_id").as("id"), col("component"))
-    // NOTE (r14): an eager localCheckpoint on `labeled` (3 consumers)
+    // NOTE (r14): an eager checkpoint of `labeled` (3 consumers)
     // was MEASURED NEUTRAL (min-of-3 3.17 s → 3.17 s, jobs 36 → 38,
     // back-to-back JobProbe) — the components loop already truncates
     // its lineage per round, so the re-executed nm⋈labels join is

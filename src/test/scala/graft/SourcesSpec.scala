@@ -88,8 +88,8 @@ class SourcesSpec extends SparkSpecBase {
       d => IO.readJson(spark, d, sample.schema))
   }
 
-  test("DSv2 word-count source reads the reference's own outputs with pruning") {
-    val dir = "/root/reference/output_compare/mr-wordc"
+  test("DSv2 word-count source reads reference-format outputs with pruning") {
+    val dir = ReferenceParitySpec.Expected.toString
     val df = spark.read.format("graft.sources.WordCountSource").load(dir)
     // totals agree with a plain-text parse of the same files
     val viaText = spark.read.textFile(dir).filter(_.nonEmpty).collect()
@@ -114,7 +114,7 @@ class SourcesSpec extends SparkSpecBase {
     val out = Files.createTempDirectory("graft_wc_sink").toString
     // single sorted partition = one reducer's file, like the C framework
     val wc = graft.operators.TextMR
-      .wordcountFile(spark, "/root/reference/input/mr-wordc/doc-0.txt")
+      .wordcountFile(spark, ReferenceParitySpec.Input.resolve("doc-0.txt").toString)
       .repartition(1).sortWithinPartitions("word")
     wc.write.format("graft.sources.WordCountSource").mode("overwrite").save(out)
     val files = new java.io.File(out).listFiles.filter(_.getName.endsWith(".txt"))
@@ -122,8 +122,8 @@ class SourcesSpec extends SparkSpecBase {
       files.head.getName.matches("part-00000-[0-9a-f]{8}\\.txt"))
     // the write path reproduces the reference's expected output byte-for-byte
     val got = java.nio.file.Files.readAllBytes(files.head.toPath)
-    val want = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/output_compare/mr-wordc/doc-0.txt"))
+    val want = java.nio.file.Files.readAllBytes(
+      ReferenceParitySpec.Expected.resolve("doc-0.txt"))
     assert(java.util.Arrays.equals(got, want),
       s"sink output differs from reference (${got.length} vs ${want.length} bytes)")
     // round-trip through the connector's own read side
