@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Host
+
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -27,9 +29,9 @@ import org.apache.spark.sql.SparkSession
   *   normal burn (the box was busy, not the engine); a true
   *   regression raises wall AND cpu on every rep. One known
   *   confounder: process CPU time includes GC threads, so a
-  *   periodic concurrent GC cycle (see the cleaner config below)
-  *   overlapping a SHORT query's reps inflates wall and cpu
-  *   together — distinguish from a real regression by rerunning
+  *   periodic concurrent GC cycle (the cleaner cadence set by
+  *   [[graft.core.Session]]) overlapping a SHORT query's reps
+  *   inflates wall and cpu together — distinguish from a real regression by rerunning
   *   that query alone (SPARK_GRAFT_BENCH_FILTER) before acting.
   * - `total_cpu_med`: Σ over queries of the CPU seconds of each
   *   query's median-wall rep — the summary-line scalar twin of the
@@ -60,22 +62,6 @@ import org.apache.spark.sql.SparkSession
   * n_ok says how partial.
   */
 object Bench {
-  private def loadavg1(): String =
-    try java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0)
-    catch { case _: Throwable => "-1" }
-
-  /** Cumulative hypervisor CPU-steal jiffies (/proc/stat cpu col 8,
-    * USER_HZ = 100); -1 off-Linux. Loadavg only sees THIS VM's run
-    * queue — a noisy host neighbor inflates wall times while loadavg
-    * reads idle, and the steal delta is the only forensic that
-    * catches it (observed: a loadavg-0.36 capture with 100+ stolen
-    * CPU-seconds and 3× spikes on deterministic queries). */
-  private def stealJiffies(): Long =
-    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
-      .linesIterator.next().trim.split("\\s+")(8).toLong
-    catch { case _: Throwable => -1L }
-
   /** Cumulative process CPU time (user+sys, all threads), ns; -1 if
     * the platform bean doesn't expose it. */
   private def processCpuNs(): Long =
@@ -119,53 +105,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.ShuffleIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive parquet timestamps read as LTZ (pre-Spark-4 behavior):
-      // the driver's testdata encodes ts/o_orderdate/l_shipdate as
-      // timestamp[us] without a zone, and the UTC session makes the
-      // LTZ reading value-identical to DuckDB's naive interpretation
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Long-run block hygiene. Local-checkpoint blocks (every iterative
-      // loop's lineage truncation) are freed by ContextCleaner only
-      // after a GC drops their RDD references into its queue — and on a
-      // 24g heap that never fills, the only guaranteed GC is Spark's
-      // periodic one, whose DEFAULT interval (30min) is close to a full
-      // 133-query × 3-rep run. Measured effect of the backlog: the
-      // cache-retained suite pass after the ~35-min median phase ran
-      // 193 s with q1_agg at 9.9 s, vs 114 s / sub-second q1_agg on a
-      // fresh JVM — same code, same box. A 2-minute cadence bounds the
-      // block pile-up; ExplicitGCInvokesConcurrent (build.sbt) keeps
-      // each cycle concurrent instead of a stop-the-world Full GC
-      // inside someone's timed rep.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // the SQL status store retains up to 1000 executions' plan
-      // graphs even with the UI disabled — a multi-rep 133-query run
-      // holds every one of them on the heap
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     // absorb one-time session/codegen warmup outside the per-query timings
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(SparkEntry.prefixes)
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    val loadStart = loadavg1()
-    val stealStart = stealJiffies()
+    val loadStart = Host.loadavg1()
+    val stealStart = Host.stealJiffies()
     val canaryStart = canaryMedian(spark, reps)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        filter.forall(_.exists(name.startsWith)) }
+    val selected = SparkEntry.select(filter)
     if (selected.isEmpty) {
       // an empty or typo'd filter must not print an instant-pass
       // {"value":0.000,"n_ok":0} bench with a zero exit
@@ -208,7 +158,7 @@ object Bench {
     // headline, so they land on disk BEFORE the (minutes-long) suite
     // pass — a harness timeout mid-suite then truncates the honesty
     // extras, not the round's bench (the r3 parsed:null class)
-    writeAndPrint(results, Nil, -1.0, loadStart, loadavg1(), stealStart,
+    writeAndPrint(results, Nil, -1.0, loadStart, Host.loadavg1(), stealStart,
       canaryStart, canaryEnd, sfDir, reps, filter, printToStdout = false)
     // pipeline-shaped suite pass: cold caches at the start, retained
     // across queries so PlanCache-shared frames are built once
@@ -229,7 +179,7 @@ object Bench {
       } else name -> -1.0
     }
     val suiteSec = (System.nanoTime() - suiteT0) / 1e9
-    writeAndPrint(results, suiteTimes, suiteSec, loadStart, loadavg1(),
+    writeAndPrint(results, suiteTimes, suiteSec, loadStart, Host.loadavg1(),
       stealStart, canaryStart, canaryEnd, sfDir, reps, filter,
       printToStdout = true)
     spark.stop()
@@ -299,7 +249,7 @@ object Bench {
       filter.map(f => s""""filter":"${f.mkString(",")}",""").getOrElse("")
     // hypervisor steal across the whole run, seconds (USER_HZ = 100);
     // -1 when /proc/stat is unreadable at either end
-    val stealNow = stealJiffies()
+    val stealNow = Host.stealJiffies()
     val stealSec =
       if (stealStart < 0 || stealNow < 0) "-1.000"
       else r3((stealNow - stealStart) / 100.0)

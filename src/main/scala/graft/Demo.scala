@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,18 +12,7 @@ import org.apache.spark.sql.types._
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive parquet timestamps read as LTZ (pre-Spark-4 behavior):
-      // the driver's testdata encodes ts/o_orderdate/l_shipdate as
-      // timestamp[us] without a zone, and the UTC session makes the
-      // LTZ reading value-identical to DuckDB's naive interpretation
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = core.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

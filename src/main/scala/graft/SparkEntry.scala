@@ -20,8 +20,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TextMR.wordcount(spark, "/root/testdata/sf0.001")
 
+  /** A query selection as a comma-separated list of name prefixes
+    * (blank items dropped). */
+  def prefixes(spec: String): Seq[String] =
+    spec.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** The queries whose name starts with one of `prefixes` (all of them
+    * when None), sorted by name. */
+  def select(prefixes: Option[Seq[String]])
+      : Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => prefixes.forall(_.exists(name.startsWith)) }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A. MapReduce core
     "mr_wordcount" -> (TextMR.wordcount _),
     "mr_grep_count" -> (TextMR.grepCount _),
@@ -1265,7 +1277,7 @@ object SparkEntry {
     * family (md5-60bit + affine salts over 2³¹−1) and the LSH/IVF ops
     * inline their plane/codebook constants, so DuckDB reproduces the
     * identical signatures, buckets, and cells. */
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "mr_wordcount" ->
       """SELECT word, count(*) AS cnt
          FROM (SELECT unnest(string_split_regex(text, '[^A-Za-z]+')) AS word

@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Shuffle-I/O session tuning shared by every driver-contract main
-  * (Bench / Verify / BenchStream / BenchIvf / JobProbe / PlanDump).
+/** Shuffle-I/O session tuning, applied first by the session factory
+  * [[Session.local]] (and by external builders through [[tune]]).
   *
   * Why this exists (optimization guide §2.1-§2.2, measured r14): the
   * default bypass-merge shuffle writer creates R temp files per map
@@ -59,14 +59,14 @@ object ShuffleIo {
       } catch { case _: Throwable => None }
     }
 
+  /** The tuning as ordered confs: the serialized writer, then the
+    * local dir when [[localDir]] finds one. */
+  private[graft] def confs: Seq[(String, String)] =
+    Seq("spark.shuffle.sort.bypassMergeThreshold" -> "0") ++
+      localDir().map("spark.local.dir" -> _)
+
   /** Apply the shuffle-I/O tuning to a session builder. Call BEFORE
     * caller-specific configs so a caller can still override. */
-  def tune(b: SparkSession.Builder): SparkSession.Builder = {
-    val withWriter =
-      b.config("spark.shuffle.sort.bypassMergeThreshold", "0")
-    localDir() match {
-      case Some(d) => withWriter.config("spark.local.dir", d)
-      case None => withWriter
-    }
-  }
+  def tune(b: SparkSession.Builder): SparkSession.Builder =
+    confs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
@@ -75,25 +74,9 @@ class FixpointSpec extends SparkSpecBase {
   }
 
   test("localCheckpoint appears in main code only inside graft/core/Fixpoint.scala") {
-    val root = sourceRoot
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => root.relativize(p).toString.replace('\\', '/') !=
-        "graft/core/Fixpoint.scala")
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
-        .contains("localCheckpoint"))
-      .map(p => root.relativize(p).toString).toSeq
+    val offenders = MainSources.containing("localCheckpoint")
+      .filterNot(_ == "graft/core/Fixpoint.scala")
     assert(offenders.isEmpty,
       s"lineage cuts belong to graft.core.Fixpoint: ${offenders.mkString(", ")}")
-  }
-
-  /** `src/main/scala` of this checkout, found by walking up from the
-    * compiled test classes. */
-  private def sourceRoot: Path = {
-    var dir = Paths.get(getClass.getResource("/wordcount").toURI)
-    while (dir != null && !Files.isDirectory(dir.resolve("src/main/scala")))
-      dir = dir.getParent
-    assert(dir != null, "src/main/scala not found above the test classes")
-    dir.resolve("src/main/scala")
   }
 }

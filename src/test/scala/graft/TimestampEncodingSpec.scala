@@ -11,7 +11,8 @@ import graft.streaming.Streams
   * generations (int64 nanos → naive timestamp[us]); a naive
   * timestamp[us] column reads as TIMESTAMP_NTZ in a stock Spark 4
   * session, and `cast(ntz as double)` / `percentile(ts, …)` /
-  * watermarks then fail or drift. Our own mains pin
+  * watermarks then fail or drift. Our own sessions
+  * ([[graft.core.Session]]) pin
   * `spark.sql.parquet.inferTimestampNTZ.enabled=false`, but the
   * driver's smoke session is NOT ours — these tests run a session
   * withOUT that conf (the hostile configuration) and pin that the
@@ -45,6 +46,9 @@ class TimestampEncodingSpec extends SparkSpecBase {
     val raw = ntzSession.read.parquet(s"$Sf/events.parquet")
     assume(raw.schema("ts").dataType == TimestampNTZType,
       "testdata no longer NTZ-encoded; scenario vacuous")
+    // the factory session's conf is what makes the other side LTZ
+    assert(spark.read.parquet(s"$Sf/events.parquet").schema("ts").dataType ==
+      TimestampType)
     def runIn(s: org.apache.spark.sql.SparkSession) =
       Events.qSessionize(s, Sf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
